@@ -118,3 +118,48 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def hfp_feed():
+    """Generator of a deterministic HFP line feed for hermetic tests:
+    ``hfp_feed(n_msgs, seed)`` returns ``(lines, rows)`` — the raw
+    ``bytes`` lines to write, and the ``(server_ts, topic, payload)``
+    row each non-blank line parses to, in file order.
+
+    About a third of the messages get a second copy later in the feed
+    (new server_ts, same topic and payload: a duplicate).  Topics carry
+    multibyte UTF-8 destinations and one with a space; some lines end
+    in ``\\r\\n``, and blank lines are interspersed."""
+    import random
+
+    dests = ["Itäkeskus", "Töölö", "Elielinaukio 2", "Malmi"]
+
+    def make(n_msgs: int, seed: int = 7):
+        rng = random.Random(seed)
+        msgs = []
+        for i in range(n_msgs):
+            veh = rng.randrange(40)
+            topic = (
+                f"/hfp/v2/journey/ongoing/vp/bus/0022/{veh:05d}/1055/1/"
+                f"{rng.choice(dests)}/7:05/1454102/4/60;25/20/14/95"
+            )
+            payload = (
+                f'{{"VP":{{"desi":"55","dir":"1","oper":22,"veh":{veh},'
+                f'"tsi":{1571 * 10**6 + i},"spd":{rng.uniform(0, 20):.2f},'
+                f'"stop":"Pasila","route":"1055"}}}}'
+            )
+            msgs.append((topic, payload))
+        order = list(range(n_msgs)) + rng.sample(range(n_msgs), n_msgs // 3)
+        order.sort(key=lambda i: i + rng.uniform(0, 40))
+        lines, rows = [], []
+        for k, i in enumerate(order):
+            if rng.random() < 0.02:
+                lines.append(rng.choice([b"\n", b"\r\n"]))
+            ts = f"2019-10-14T10:{k // 600 % 60:02d}:{k // 10 % 60:02d}.{k % 10}00Z"
+            end = "\r\n" if rng.random() < 0.2 else "\n"
+            lines.append(f"{ts} {msgs[i][0]} {msgs[i][1]}{end}".encode())
+            rows.append((ts, *msgs[i]))
+        return lines, rows
+
+    return make

@@ -1,14 +1,20 @@
 """Custom Python DataSource (`format("hfp_text")`): split-boundary
-correctness against the column-expression parser, golden corpus parity.
+correctness against the column-expression parser, golden corpus parity,
+and the byte-range stream reader on generated feeds (no corpus needed).
 """
 
 from __future__ import annotations
+
+import os
+import random
+import time
 
 import pytest
 
 from transitdata_hfp_deduplicator_spark.sources.hfp import read_corpus
 from transitdata_hfp_deduplicator_spark.sources.hfp_datasource import (
     HfpTextDataSource,
+    HfpTextStreamReader,
     parse_hfp_line,
 )
 
@@ -83,7 +89,6 @@ def test_streaming_tail_ingests_live_appends(spark, tmp_path):
     sdf = (
         spark.readStream.format("hfp_text")
         .option("path", feed)
-        .option("batchBytes", str(256 * 1024))
         .load()
     )
     q = (
@@ -134,9 +139,8 @@ def test_sink_roundtrip_golden(spark, tmp_path):
     deduped = (
         spark.readStream.format("hfp_text")
         .option("path", CORPUS)
-        # availableNow drains what one read() call reports available —
-        # size the micro-batch to cover the whole corpus
-        .option("batchBytes", str(1 << 25))
+        # availableNow drains every byte the file holds when the query
+        # starts, in one micro-batch
         .load()
         .groupBy("topic", "payload")
         .agg(F.min("server_ts").alias("server_ts"))
@@ -245,3 +249,174 @@ def test_parse_parity_on_adversarial_lines(spark, tmp_path):
     for ln, a, b in zip(lines, via_py, via_sql):
         if "{" in ln and " " in ln.split("{")[0]:
             assert a == b, f"parsers disagree on {ln!r}: {a} vs {b}"
+
+
+# -- stream reader on generated feeds -------------------------------------
+
+
+def _write(path, lines) -> str:
+    with open(path, "ab") as f:
+        f.write(b"".join(lines))
+    return str(path)
+
+
+def _stream(spark, path, n_splits="3"):
+    return (
+        spark.readStream.format("hfp_text")
+        .option("path", path)
+        .option("numPartitions", n_splits)
+        .load()
+    )
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.select("server_ts", "topic", "payload").collect()))
+
+
+def _read(reader, parts) -> list[tuple]:
+    """Rows of the Arrow batches ``reader.read`` yields for ``parts``."""
+    return [
+        row
+        for p in parts
+        for batch in reader.read(p)
+        for row in zip(*(c.to_pylist() for c in batch.columns))
+    ]
+
+
+@pytest.mark.parametrize("n", [1, 3, 7, 32])
+def test_stream_batches_deliver_every_line_once(tmp_path, hfp_feed, n):
+    """Batches cut the file at line ends, mid-line and inside a
+    multibyte character; each splits into at most ``n`` byte ranges
+    that tile it.  Reading every range of every batch in order gives
+    each line exactly once, in file order."""
+    lines, rows = hfp_feed(600)
+    path = _write(tmp_path / "feed.txt", lines)
+    data = (tmp_path / "feed.txt").read_bytes()
+    reader = HfpTextStreamReader({"path": path, "numPartitions": str(n)})
+    assert reader.initialOffset() == {"pos": 0}
+    assert reader.latestOffset() == {"pos": len(data)}
+    line_end = data.index(b"\n", len(data) // 2) + 1
+    mid_char = data.index("ä".encode()) + 1
+    cuts = sorted(
+        {0, len(data), line_end, mid_char, *random.Random(n).sample(range(1, len(data)), 4)}
+    )
+    got = []
+    for lo, hi in zip(cuts, cuts[1:]):
+        parts = reader.partitions({"pos": lo}, {"pos": hi})
+        assert 1 <= len(parts) <= n
+        assert parts[0].start == lo and parts[-1].end == hi
+        assert all(a.end == b.start for a, b in zip(parts, parts[1:]))
+        got += _read(reader, parts)
+    assert got == rows
+
+
+@pytest.mark.parametrize("block", [1, 5, 1 << 20])
+def test_block_reads_match_line_by_line_parse(tmp_path, monkeypatch, block):
+    """The reader decodes and splits whole-line blocks; on random
+    adversarial bytes (invalid UTF-8, lone '\\r', braces, blank lines,
+    no final newline) every split count and block size gives the rows
+    of a plain line-by-line parse."""
+    from transitdata_hfp_deduplicator_spark.sources import hfp_datasource
+
+    monkeypatch.setattr(hfp_datasource, "_BLOCK", block)
+    alphabet = [b"a", b" ", b"{", b"}", b"\n", b"\r", "ä".encode(), b"\xc3", b"\xff", b"\t"]
+    rng = random.Random(block)
+    path = tmp_path / "adversarial.txt"
+    for _ in range(200):
+        data = b"".join(rng.choice(alphabet) for _ in range(rng.randrange(60)))
+        path.write_bytes(data)
+        lines = (raw.decode("utf-8", errors="replace").rstrip("\r\n") for raw in data.split(b"\n"))
+        want = [parse_hfp_line(line) for line in lines if line]
+        n = rng.choice([1, 3, 7, 32])
+        reader = hfp_datasource.HfpTextReader({"path": str(path), "numPartitions": str(n)})
+        assert _read(reader, reader.partitions()) == want, data
+
+
+def test_available_now_stream_equals_batch_read(spark, tmp_path, hfp_feed):
+    """``trigger(availableNow=True)`` reads every byte present at start,
+    in one micro-batch: the same rows as ``spark.read``."""
+    lines, rows = hfp_feed(1500, seed=3)
+    path = _write(tmp_path / "feed.txt", lines)
+    q = (
+        _stream(spark, path)
+        .writeStream.format("memory")
+        .queryName("hfp_available_now")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 1 and batches[0]["numInputRows"] == len(rows)
+    batch = _rows(spark.read.format("hfp_text").option("path", path).load())
+    assert _rows(spark.table("hfp_available_now")) == batch == sorted(rows)
+
+
+def test_stream_follows_appends(spark, tmp_path, hfp_feed):
+    """A running query picks up lines appended to the file, as the
+    app's ``--follow`` mode does: every line arrives exactly once."""
+    lines, rows = hfp_feed(1200, seed=4)
+    feed = _write(tmp_path / "feed.txt", lines[: len(lines) // 2])
+    out = str(tmp_path / "out")
+    q = (
+        _stream(spark, feed)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(processingTime="500 milliseconds")
+        .start()
+    )
+
+    def _count() -> int:
+        try:
+            return spark.read.parquet(out).count()
+        except Exception:  # noqa: BLE001 - sink dir not written yet
+            return 0
+
+    try:
+        deadline = time.time() + 90
+        while q.lastProgress is None and time.time() < deadline:
+            time.sleep(0.2)
+        _write(feed, lines[len(lines) // 2 :])
+        while _count() < len(rows) and time.time() < deadline:
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    assert _rows(spark.read.parquet(out)) == sorted(rows)
+
+
+def test_restart_from_checkpoint_loses_and_repeats_nothing(spark, tmp_path, hfp_feed):
+    """Stop and restart the query from its checkpoint between appends,
+    and once as if it crashed after logging a batch's offsets but before
+    committing it.  The restart replays that batch over its logged byte
+    range, not the grown file (availableNow runs as a single batch for
+    a Python source, so the replay is the whole restart); the next run
+    reads the rest.  The output holds every line exactly once."""
+    lines, rows = hfp_feed(1200, seed=5)
+    feed, out, ck = (str(tmp_path / d) for d in ("feed.txt", "out", "ck"))
+    chunks = [lines[len(lines) * i // 4 : len(lines) * (i + 1) // 4] for i in range(4)]
+
+    def drain() -> None:
+        q = (
+            _stream(spark, feed)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    for chunk in chunks[:3]:
+        _write(feed, chunk)
+        drain()
+    # undo batch 2's commit in the checkpoint and in the sink's log
+    for log in (os.path.join(ck, "commits"), os.path.join(out, "_spark_metadata")):
+        for name in ("2", ".2.crc"):
+            os.remove(os.path.join(log, name))
+    _write(feed, chunks[3])
+    drain()
+    first_three = sum(1 for ln in chunks[0] + chunks[1] + chunks[2] if ln.strip())
+    assert _rows(spark.read.parquet(out)) == sorted(rows[:first_three])
+    drain()
+    assert sorted(n for n in os.listdir(os.path.join(ck, "commits")) if n.isdigit()) == list("0123")
+    assert _rows(spark.read.parquet(out)) == sorted(rows)

@@ -4,9 +4,12 @@ operators without a measured recall are not 'done'."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from transitdata_hfp_deduplicator_spark.operators.similarity import (
+    _exploded_shingles,
+    _shingled,
     cosine_topk,
     ivf_topk,
     jaccard_pairs,
@@ -326,3 +329,42 @@ def test_incremental_lsh_max_bucket_caps_both_sides(spark, sf_dir):
     dup_capped = {x[0] for x in capped if x[1]}
     dup_uncapped = {x[0] for x in uncapped if x[1]}
     assert dup_capped <= dup_uncapped
+
+
+def _plain_explode(sh, with_size: bool):
+    """The spelling ``_exploded_shingles`` stands in for."""
+    cols = ["doc_id", F.size("shingles").alias("n_sh")] if with_size else ["doc_id"]
+    names = ["doc_id", "n_sh"] if with_size else ["doc_id"]
+    return sh.select(*cols, F.explode("shingles").alias("sh_raw")).select(
+        *names, F.xxhash64("sh_raw").alias("s")
+    )
+
+
+@pytest.mark.parametrize("shingle_n", [1, 2, 3, 5])
+def test_exploded_shingles_matches_plain_explode(spark, shingle_n):
+    """``_exploded_shingles`` (explode_outer + a null filter) gives the
+    rows plain ``explode`` gives, over the shingle producer every
+    caller uses (``_shingled``: distinct tokens for n = 1, token
+    n-grams above) on empty, blank, NULL, short and repetitive texts.
+    The two differ only on NULL array elements, so a producer that
+    starts emitting them fails here — as the last check shows."""
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over"),
+            (2, "The  quick\tbrown FOX"),
+            (3, ""),
+            (4, "   "),
+            (5, None),
+            (6, "one"),
+            (7, "two words"),
+            (8, "Itäkeskus ö å Itäkeskus ö å"),
+            (9, "a a a a a a"),
+        ],
+        "doc_id long, text string",
+    )
+    sh = _shingled(docs, "doc_id", "text", shingle_n)
+    for with_size in (False, True):
+        got = sorted(_exploded_shingles(sh, with_size).collect())
+        assert got == sorted(_plain_explode(sh, with_size).collect())
+    with_null = spark.createDataFrame([(1, ["a", None])], "doc_id long, shingles array<string>")
+    assert _exploded_shingles(with_null).count() != _plain_explode(with_null, False).count()

@@ -12,6 +12,13 @@ checkpoint) → tumbling duplicate-ratio stats with the reference's
 alert bands logged per window (Analytics.java:47-67).  All thresholds
 and the state TTL come from the same env-var surface the reference
 used (config.DedupConfig / environment.conf names).
+
+Each micro-batch takes every byte of the source present when its
+trigger fires, split into the reader's ``numPartitions`` byte ranges
+that executor Python workers parse in parallel.  Batches have no size
+cap (PySpark 4.1 gives Python sources no admission control), so the
+default drain (no ``--follow``) forwards the whole file in one batch
+per query, and ``--follow`` picks up appended lines on later triggers.
 """
 
 from __future__ import annotations
@@ -54,7 +61,6 @@ def main(argv: list[str] | None = None) -> int:
     parsed = (
         spark.readStream.format("hfp_text")
         .option("path", args.source)
-        .option("batchBytes", str(64 << 20))
         .load()
         # processing-time arrival stamp: the reference's only clock is
         # wall time (Deduplicator.java:51)

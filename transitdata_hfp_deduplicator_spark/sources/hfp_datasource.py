@@ -1,17 +1,23 @@
 """Custom Spark DataSource for the HFP line corpus (Spark 4 Python
-DataSource API): ``spark.read.format("hfp_text")`` yields parsed
-(server_ts, topic, payload) rows directly from ``ts topic json`` lines
+DataSource API): ``format("hfp_text")`` reads and streams parsed
+(server_ts, topic, payload) rows from ``ts topic json`` lines
 (hfp-5000.txt format; parse rule ITDeduplicatorTest.java:138-148 —
 first space ends the timestamp, first '{' starts the payload, because
-topics may contain spaces).
+topics may contain spaces), and its stream sink writes them back.
 
 This is the engine's "own connector" surface: where `sources/broker.py`
 maps an EXISTING source's columns, this registers a NEW format with the
-planner.  Splits are byte ranges with the Hadoop text-input boundary
-rule (a partition owns the lines that START inside its range; the first
-partial line belongs to the predecessor), so parallelism scales with
-file size and no central line index is needed — the same contract that
-lets a 1000-executor cluster scan a 100 TB text dump.
+planner.  Batch and stream reads split into ``numPartitions`` (default
+8) byte ranges with the Hadoop text-input boundary rule (a partition
+owns the lines that START inside its range) and parse them in executor
+Python workers, so parallelism scales with file size and no central
+line index is needed.
+
+A stream micro-batch is every byte present when its trigger fires: the
+offset is ``{"pos": <byte>}`` and ``latestOffset`` is one ``stat``.  The
+batch size has no cap: PySpark 4.1 gives Python sources no admission
+control, so under ``availableNow`` Spark fixes the end from a single
+``latestOffset`` call and any cap would truncate the drain.
 """
 
 from __future__ import annotations
@@ -25,11 +31,14 @@ from dataclasses import dataclass
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     DataSourceStreamWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
+
+_COLUMNS = ["server_ts", "topic", "payload"]
+_BLOCK = 1 << 20  # bytes decoded and parsed per Arrow batch
 
 
 class HfpByteRange(InputPartition):
@@ -50,13 +59,56 @@ def parse_hfp_line(line: str) -> tuple[str, str, str]:
     return line[:sp], line[sp + 1 : brace].strip(), line[brace:]
 
 
-class HfpTextReader(DataSourceReader):
+class _ByteRangeReader:
+    """What the batch and the stream reader share: the options, the
+    split of ``[start, end)`` into ranges of ``total / numPartitions``
+    bytes, and the line loop that runs in the executor's Python worker."""
+
     def __init__(self, options):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("hfp_text requires .option('path', ...)")
         self.n_splits = int(options.get("numPartitions", "8"))
 
+    def _ranges(self, path: str, start: int, end: int, total: int) -> list[HfpByteRange]:
+        step = max(1, (total + self.n_splits - 1) // self.n_splits)
+        return [HfpByteRange(path, s, min(s + step, end)) for s in range(start, end, step)]
+
+    def read(self, partition: HfpByteRange) -> Iterator:
+        """Arrow batches of the lines that START inside the range (the
+        last one read to its end, past ``end``), decoded and split a
+        whole-line block at a time: per line, only the parse is Python."""
+        import pyarrow as pa  # executor side only: the driver never reads
+
+        with open(partition.path, "rb") as f:
+            pos = partition.start
+            if pos > 0:
+                # boundary rule: discard the line containing byte
+                # start-1; if that byte is '\n' the discarded chunk is
+                # exactly the predecessor's final line, so the line
+                # starting AT `start` survives.
+                f.seek(pos - 1)
+                pos += len(f.readline()) - 1
+            while pos < partition.end:
+                block = f.read(min(_BLOCK, partition.end - pos))
+                if not block:
+                    break
+                if not block.endswith(b"\n"):
+                    block += f.readline()  # finish the block's last line
+                pos += len(block)
+                text = block.decode("utf-8", errors="replace")
+                rows = [
+                    parse_hfp_line(line)
+                    for line in (raw.rstrip("\r\n") for raw in text.split("\n"))
+                    if line
+                ]
+                if rows:
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(col, pa.string()) for col in zip(*rows)], names=_COLUMNS
+                    )
+
+
+class HfpTextReader(_ByteRangeReader, DataSourceReader):
     def partitions(self):
         if os.path.isdir(self.path):  # a sink-written batch dir of parts
             files = sorted(
@@ -70,84 +122,26 @@ class HfpTextReader(DataSourceReader):
         total = sum(os.path.getsize(f) for f in files)
         if total == 0:
             return [HfpByteRange(files[0] if files else self.path, 0, 0)]
-        step = max(1, (total + self.n_splits - 1) // self.n_splits)
-        parts = []
-        for f in files:
-            size = os.path.getsize(f)
-            parts.extend(
-                HfpByteRange(f, s, min(s + step, size))
-                for s in range(0, size, step)
-            )
-        return parts
-
-    def read(self, partition: HfpByteRange) -> Iterator[tuple]:
-        with open(partition.path, "rb") as f:
-            if partition.start > 0:
-                # boundary rule: discard the line containing byte
-                # start-1; if that byte is '\n' the discarded chunk is
-                # exactly the predecessor's final line, so the line
-                # starting AT `start` survives.
-                f.seek(partition.start - 1)
-                f.readline()
-            while True:
-                pos = f.tell()
-                if pos >= partition.end:
-                    break
-                raw = f.readline()
-                if not raw:
-                    break
-                line = raw.decode("utf-8", errors="replace").rstrip("\r\n")
-                if line:
-                    yield parse_hfp_line(line)
+        return [r for f in files for r in self._ranges(f, 0, os.path.getsize(f), total)]
 
 
-class HfpTextStreamReader(SimpleDataSourceStreamReader):
-    """Tail-like streaming ingest of an HFP line file: the offset is a
-    BYTE position; each micro-batch reads up to ``batchBytes`` new
-    bytes extended to the next line boundary.  ``readBetweenOffsets``
-    replays any committed range deterministically (exactly the
-    replayability contract a broker offset gives the checkpoint) — this
-    is the engine's live-feed analog of the reference's Pulsar consumer
-    (Deduplicator.java:43), growing file standing in for growing topic.
+class HfpTextStreamReader(_ByteRangeReader, DataSourceStreamReader):
+    """Tail-like streaming ingest of an HFP line file, the live-feed
+    analog of the reference's Pulsar consumer (Deduplicator.java:43):
+    a committed byte range replays deterministically, the contract a
+    broker offset gives the checkpoint.  A batch ends where the file
+    ended when its trigger fired, so the writer must append whole lines.
     """
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("hfp_text requires .option('path', ...)")
-        self.batch_bytes = int(options.get("batchBytes", str(1 << 20)))
 
     def initialOffset(self) -> dict:
         return {"pos": 0}
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        pos = int(start["pos"])
-        size = os.path.getsize(self.path)
-        if pos >= size:
-            return iter(()), {"pos": pos}
-        with open(self.path, "rb") as f:
-            f.seek(pos)
-            rows, limit = [], min(pos + self.batch_bytes, size)
-            while f.tell() < limit:
-                raw = f.readline()
-                if not raw:
-                    break
-                line = raw.decode("utf-8", errors="replace").rstrip("\r\n")
-                if line:
-                    rows.append(parse_hfp_line(line))
-            end = f.tell()
-        return iter(rows), {"pos": end}
+    def latestOffset(self) -> dict:
+        return {"pos": os.path.getsize(self.path)}
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        with open(self.path, "rb") as f:
-            f.seek(int(start["pos"]))
-            while f.tell() < int(end["pos"]):
-                raw = f.readline()
-                if not raw:
-                    break
-                line = raw.decode("utf-8", errors="replace").rstrip("\r\n")
-                if line:
-                    yield parse_hfp_line(line)
+    def partitions(self, start: dict, end: dict) -> list[HfpByteRange]:
+        lo, hi = int(start["pos"]), int(end["pos"])
+        return self._ranges(self.path, lo, hi, hi - lo)
 
     def commit(self, end: dict) -> None:
         pass  # nothing to release; the file is the retention
@@ -215,7 +209,7 @@ class HfpTextDataSource(DataSource):
     def reader(self, schema) -> HfpTextReader:
         return HfpTextReader(self.options)
 
-    def simpleStreamReader(self, schema) -> HfpTextStreamReader:
+    def streamReader(self, schema) -> HfpTextStreamReader:
         return HfpTextStreamReader(self.options)
 
     def streamWriter(self, schema, overwrite: bool) -> HfpTextStreamWriter:
